@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from hive_udf_spark.functions.hashing import fast_hash64, portable_hash60
 from hive_udf_spark.functions.text import word_set
-from hive_udf_spark.operators.util import ensure_min_parallelism, scatter_pairs
+from hive_udf_spark.operators.util import ensure_min_parallelism
 
 _LOG = logging.getLogger(__name__)
 
@@ -1069,7 +1069,7 @@ def prefix_filter_pairs(
         # measured: 12 parquet scans of `documents` in one plan).
         ws = ws.localCheckpoint(eager=False)
     ranked = _ranked_by_freq(ws)
-    cands = scatter_pairs(_prefix_candidates_from_ranked(ranked, threshold))
+    cands = _prefix_candidates_from_ranked(ranked, threshold)
     docs_k = ranked.select(
         "__id",
         F.transform(F.col("__rs"), lambda s: s["__k"]).alias("__wk"),
@@ -1093,6 +1093,17 @@ def prefix_filter_pairs(
             union.cast("long").alias("union_size"),
         )
         .filter(F.col("inter_size") * 1_000_000 >= t_ppm * F.col("union_size"))
+    )
+
+
+def _token_freq(ws: DataFrame) -> DataFrame:
+    """Global ``(__t, __f)`` token frequencies of a prepared ``(__id, __w)``
+    distinct-token relation: the canonical order ``_ranked_by_freq``
+    sorts each document's tokens by."""
+    return (
+        ws.select(F.explode("__w").alias("__t"))
+        .groupBy("__t")
+        .agg(F.count(F.lit(1)).alias("__f"))
     )
 
 
@@ -1120,11 +1131,9 @@ def _ranked_by_freq(ws: DataFrame) -> DataFrame:
     No dense rank materialization: a global row_number over the
     vocabulary would be a single-partition window — this stays an
     ordinary shuffle join + per-doc sort, the billion-token shape."""
-    tokens = ws.select(F.explode("__w").alias("__t"))
-    freq = tokens.groupBy("__t").agg(F.count(F.lit(1)).alias("__f"))
     # materialized eagerly: the injectivity guard below must run NOW, and
     # the rank join then reuses the same blocks instead of re-aggregating
-    freq = freq.localCheckpoint(eager=True)
+    freq = _token_freq(ws).localCheckpoint(eager=True)
     n_tok, n_hash = freq.agg(
         F.count(F.lit(1)), F.countDistinct(F.xxhash64("__t"))
     ).collect()[0]
@@ -1194,11 +1203,8 @@ def _prefix_candidates_from_ranked(ranked: DataFrame, threshold: float) -> DataF
             F.posexplode(F.slice("__rs", 1, prefix_len)).alias("__p", "__s"),
         ).select("__id", "__n", "__p", F.col("__s.__k").alias("__r"))
 
-    # the ranked aggregate's output is byte-small, so AQE coalesces it to
-    # ~1 partition and the self-join's fan-out + partial dedup run
-    # single-task (r15) — round-robin the skinny exploded prefix rows
-    probe = scatter_pairs(exploded(plen))
-    index = scatter_pairs(exploded(ilen))
+    probe = exploded(plen)
+    index = exploded(ilen)
     a, b = index.alias("a"), probe.alias("b")
     # alpha = ceil(t/(1+t) * (na+nb)), exact integer rational
     alpha = F.expr(
@@ -1402,8 +1408,6 @@ def containment_pairs(
         F.col("__n").alias("__nb"),
         F.posexplode(F.col("__rs")).alias("__pb", "__s"),
     ).select("id_b", "__nb", "__pb", F.col("__s.__k").alias("__r"))
-    probe = scatter_pairs(probe)
-    container = scatter_pairs(container)
     # positional filter (PPJoin adapted to containment): a qualifying
     # (a ⊂~ b) pair needs overlap >= ceil(t*na), all of it at-or-after
     # the first common token in the canonical order — so
@@ -1430,7 +1434,6 @@ def containment_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    cands = scatter_pairs(cands)
     docs_k = ranked.select(
         "__id",
         F.transform(F.col("__rs"), lambda s: s["__k"]).alias("__wk"),

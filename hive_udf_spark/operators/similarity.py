@@ -333,6 +333,9 @@ def embedding_near_pairs_lsh(
     pruning weakens — measured in tests/test_similarity.py. Tune
     (nbits, bands): more bands → recall; more bits/band → pruning.
 
+    Every vector must have exactly ``dim`` elements; the query fails
+    with a ``raise_error`` naming the column otherwise.
+
     caches: as in dedup.near_dup_pairs — pass a list to persist the
     signature table across the join branches; caller unpersists.
     """
@@ -349,7 +352,21 @@ def embedding_near_pairs_lsh(
     # single-split scan => the quantize + nbits·dim signature arithmetic
     # runs in ONE task (r15, the dedup-family finding); no-op at scale
     vecs = ensure_min_parallelism(vecs)
-    q = vecs.select(F.col(id_col).alias("__id"), quantize_vec(vec_col, scale).alias("__qv"))
+    # fixed-dim contract, checked in-plan: the per-pair dot below reads
+    # exactly `dim` elements per side, so a longer vector would mix a
+    # truncated dot with full-length norms and a shorter one would fail
+    # inside element_at
+    size = F.size(vec_col)
+    vec = F.when(
+        size != dim,
+        F.raise_error(
+            F.concat(
+                F.lit(f"embedding_near_pairs_lsh: vector size != dim={dim} in column {vec_col!r}: "),
+                size.cast("string"),
+            )
+        ),
+    ).otherwise(F.col(vec_col))
+    q = vecs.select(F.col(id_col).alias("__id"), quantize_vec(vec, scale).alias("__qv"))
     sigs = q.withColumn("__sig", int_signature_expr(planes))
     if caches is not None:
         sigs = sigs.persist()

@@ -124,8 +124,6 @@ def main() -> None:
                     help="comma-separated subset of TOP")
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F  # noqa: F401
-
     from hive_udf_spark.session import get_spark
 
     spark = get_spark("bench-sf1")
@@ -143,15 +141,7 @@ def main() -> None:
 
     import bench
 
-    # warm like bench.main does
-    spark.range(1000).select(F.sum("id")).collect()
-
-    def _noop(batches):
-        yield from batches
-
-    spark.range(32 * 4).repartition(32).mapInPandas(
-        _noop, schema="id long").count()
-
+    bench.warm_up(spark)
     times, cold, n_warm = bench.bench_queries(spark, args.dir)
 
     base = {}

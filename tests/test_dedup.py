@@ -280,11 +280,11 @@ def test_prefix_filter_plan_shape(spark):
     materialized inside an eager localCheckpoint (it feeds the
     hash-injectivity guard and the rank join), so its partial_count
     lives in the checkpoint's own plan, not the returned one — assert it
-    on the same aggregate the operator builds."""
+    on the operator's own aggregate, ``_token_freq``."""
     from pyspark.sql import functions as F
 
     from hive_udf_spark.functions.text import word_set
-    from hive_udf_spark.operators.dedup import prefix_filter_pairs
+    from hive_udf_spark.operators.dedup import _token_freq, prefix_filter_pairs
 
     docs = spark.createDataFrame(
         [(i, f"tok{i % 7} tok{i % 11} common") for i in range(50)],
@@ -296,12 +296,8 @@ def test_prefix_filter_plan_shape(spark):
     )
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan
-    freq_plan = (
-        docs.select(F.explode(word_set("text")).alias("__t"))
-        .groupBy("__t")
-        .agg(F.count(F.lit(1)).alias("__f"))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    ws = docs.select(F.col("doc_id").alias("__id"), word_set("text").alias("__w"))
+    freq_plan = _token_freq(ws)._jdf.queryExecution().executedPlan().toString()
     assert "partial_count" in freq_plan
 
 

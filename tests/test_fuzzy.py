@@ -101,16 +101,16 @@ def test_plan_is_python_free(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_length_guard_error_and_skip(spark):
+def test_length_guard_error_and_skip(spark, raises_guard_error):
     """r8 verdict item 9: the operator targets short metadata — a
     document-length string must fail loudly (default) or drop out
     (on_long='skip'), never silently bloat the candidate shuffle."""
-    from pyspark.errors.exceptions.captured import SparkRuntimeException
-
     long_s = "x" * 300
     rows = [(1, "same"), (2, "same"), (3, long_s), (4, long_s)]
     df = spark.createDataFrame(rows, "doc_id long, title string")
-    with pytest.raises(SparkRuntimeException, match="max_len"):
+    # both join sides read the guard; under load AQE may report their
+    # failures together in one wrapper (accepted only around the guard)
+    with raises_guard_error("max_len"):
         edit_distance_join(df, "doc_id", "title", 1).collect()
     # skip mode: long rows excluded entirely (documented: even from
     # pairing with each other), short pairs still found
@@ -123,3 +123,34 @@ def test_length_guard_error_and_skip(spark):
         edit_distance_join(df, "doc_id", "title", 1, on_long="truncate")
     with pytest.raises(ValueError, match="max_len"):
         edit_distance_join(df, "doc_id", "title", 2, max_len=1)
+
+
+def test_guard_error_check_needs_the_guard_among_causes(spark, raises_guard_error):
+    """The multi-failure wrapper AQE raises when both join sides fail at
+    once passes the guard check only when the guard error is its cause."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors.exceptions.captured import SparkRuntimeException
+
+    # a one-stage query: the guard's error alone, never a wrapper
+    with pytest.raises(SparkRuntimeException) as info:
+        spark.range(1).select(F.raise_error(F.lit("longer than max_len=256"))).collect()
+    jvm = spark._jvm
+
+    def wrapped(*errors):
+        seq = jvm.org.apache.spark.api.python.PythonUtils.toSeq(list(errors))
+        return Py4JJavaError(
+            "collectToPython failed",
+            jvm.org.apache.spark.sql.errors.QueryExecutionErrors
+            .multiFailuresInStageMaterializationError(seq),
+        )
+
+    guard = info.value._origin
+    other = jvm.java.lang.IllegalStateException("stage lost")
+    with raises_guard_error("max_len"):
+        raise wrapped(guard, guard)
+    with pytest.raises(pytest.fail.Exception):
+        with raises_guard_error("max_len"):
+            raise wrapped(other, guard)
+    with pytest.raises(AssertionError):
+        with raises_guard_error("max_len"):
+            raise Py4JJavaError("collectToPython failed", other)

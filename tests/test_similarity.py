@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from hive_udf_spark.operators.similarity import (
@@ -153,6 +154,19 @@ def test_near_pairs_lsh_high_threshold_planted_dups(spark):
     }
     assert lsh <= exact
     assert len(lsh & exact) / len(exact) >= 0.9
+
+
+@pytest.mark.parametrize("size", [65, 63])
+def test_near_pairs_lsh_rejects_wrong_dim(spark, raises_guard_error, size):
+    """The per-pair dot reads exactly ``dim`` elements, so a longer
+    vector would mix a truncated dot with full-length norms and a
+    shorter one would fail inside element_at: both hit the size guard."""
+    from hive_udf_spark.operators.similarity import embedding_near_pairs_lsh
+
+    rows = [(0, [0.5] * 64), (1, [0.5] * 64), (2, [0.5] * size)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    with raises_guard_error(r"embedding_near_pairs_lsh: vector size != dim=64 .*: " + str(size)):
+        embedding_near_pairs_lsh(df, min_cosine=0.8, nbits=32, bands=8).collect()
 
 
 def test_embedding_dedup_clusters_no_cache_leak_and_valid_partition(spark):
