@@ -51,6 +51,7 @@ from hive_udf_spark.functions.hashing import (
     portable_hash60,
     portable_hash60_sql,
 )
+from hive_udf_spark.functions.literals import double_array_sql
 
 __all__ = [
     "pcsa_table",
@@ -157,8 +158,6 @@ def pcsa_estimate(
 
     Empty bitmaps (absent rows) contribute R_i = 0, so S is simply the
     sum over present rows — no densification join needed."""
-    tbl = _frac_pow2_literals(m)
-    neg = _frac_pow2_neg_literals(m)
     # coalesce: a GLOBAL aggregation over an empty sketch yields one row
     # with a NULL sum — S = 0 there, and the corrected estimator then
     # gives exactly 0 (grouped queries never hit this: empty groups
@@ -169,7 +168,7 @@ def pcsa_estimate(
         .alias("s_sum")
     )
     r = F.pmod(F.col("s_sum"), F.lit(m)).cast("int")
-    frac = F.element_at(F.array(*[F.lit(v) for v in tbl]), r + 1)
+    frac = F.element_at(F.expr(double_array_sql(_frac_pow2_literals(m))), r + 1)
     pow_q = F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST(s_sum div {m} AS INT))")
     # correction term 2^(−7·s_sum/(4m)): exact 1/2^q2 times a literal
     # lookup; q2 can reach 7·60/4 > 63 at saturation, where the term is
@@ -177,7 +176,7 @@ def pcsa_estimate(
     # engines branch identically
     q2 = F.expr(f"(7 * s_sum) div {4 * m}")
     r2 = F.expr(f"(7 * s_sum) % {4 * m}").cast("int")
-    frac2 = F.element_at(F.array(*[F.lit(v) for v in neg]), r2 + 1)
+    frac2 = F.element_at(F.expr(double_array_sql(_frac_pow2_neg_literals(m))), r2 + 1)
     inv_q2 = F.when(
         q2 <= 62,
         F.lit(1.0) / F.expr("shiftleft(CAST(1 AS BIGINT), CAST((7 * s_sum) div "

@@ -66,18 +66,30 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _token_hash(token: Column, seed: int, portable: bool) -> Column:
-    return portable_hash60(token, seed) if portable else fast_hash64(token, seed)
-
-
 def minhash_signature(
-    tokens: Column, num_hashes: int = 16, portable: bool = False
+    tokens: str, num_hashes: int = 16, portable: bool = False
 ) -> Column:
-    """Array of per-seed min-hashes over a token array (the MinHash
-    signature; Broder 1997). Computed entirely at scan time — one
-    ``array_min(transform(...))`` per seed, no shuffle, no Python."""
-    return F.array(
-        *[F.array_min(F.transform(tokens, lambda t: _token_hash(t, seed, portable))) for seed in range(num_hashes)]
+    """Array of per-seed min-hashes over the token array column named
+    ``tokens`` (the MinHash signature; Broder 1997). Computed entirely at
+    scan time — one ``array_min(transform(...))`` per seed, no shuffle,
+    no Python. The default xxhash64 path is one parsed SQL expression
+    (one py4j round trip per plan instead of O(num_hashes) Column
+    calls); ``portable=True`` selects the md5-based hash, built from
+    Columns."""
+    if portable:
+        return F.array(
+            *[
+                F.array_min(F.transform(F.col(tokens), lambda t: portable_hash60(t, seed)))
+                for seed in range(num_hashes)
+            ]
+        )
+    return F.expr(
+        "array("
+        + ", ".join(
+            f"array_min(transform({tokens}, __t -> xxhash64({seed}, __t)))"
+            for seed in range(num_hashes)
+        )
+        + ")"
     )
 
 
@@ -128,21 +140,21 @@ def lsh_candidate_pairs(
 
 
 def _sig_agreement_unrolled(sig_a: str, sig_b: str, num_hashes: int) -> Column:
-    """Number of agreeing MinHash signature components — the unbiased
-    Jaccard estimate's numerator. Unrolled into ``num_hashes`` codegen'd
-    equality terms instead of an ``aggregate(zip_with(...))`` fold:
-    higher-order functions are CodegenFallback (interpreted lambda
+    """Number of agreeing components of the MinHash signature columns
+    named ``sig_a`` and ``sig_b`` (struct fields as ``s.f``) — the
+    unbiased Jaccard estimate's numerator. Unrolled into ``num_hashes``
+    codegen'd equality terms instead of an ``aggregate(zip_with(...))``
+    fold: higher-order functions are CodegenFallback (interpreted lambda
     evaluation per element PER CANDIDATE PAIR — the hottest row count in
     the pipeline). Value-identical: signatures always have exactly
-    ``num_hashes`` components and integer addition is associative."""
-    terms = [
-        (F.element_at(F.col(sig_a), i) == F.element_at(F.col(sig_b), i)).cast("int")
-        for i in range(1, num_hashes + 1)
-    ]
-    est = terms[0]
-    for t in terms[1:]:
-        est = est + t
-    return est
+    ``num_hashes`` components and integer addition is associative. One
+    parsed SQL expression, as in ``similarity.dot_int_unrolled``."""
+    return F.expr(
+        " + ".join(
+            f"CAST(element_at({sig_a}, {i}) = element_at({sig_b}, {i}) AS INT)"
+            for i in range(1, num_hashes + 1)
+        )
+    )
 
 
 def jaccard_pair_stats(tokens_a: Column, tokens_b: Column) -> tuple[Column, Column]:
@@ -256,21 +268,23 @@ def near_dup_pairs(
             shingles.alias("__ws"),
         )
         .filter(F.size("__ws") > 0)
-        .withColumn("sig", minhash_signature(F.col("__ws"), num_hashes, portable))
+        .withColumn("sig", minhash_signature("__ws", num_hashes, portable))
     )
     if caches is not None:
         with_sig = with_sig.persist()
         caches.append(with_sig)
     else:
         # No caller-managed cache: materialize the signature relation
-        # once anyway (lazy local checkpoint — computed by the first
-        # stage that needs it, reused by the band join and both verify
-        # payload branches, reclaimed by the ContextCleaner when the
-        # plan is dropped). Without this the corpus is re-tokenized and
-        # re-minhashed once per plan branch (r14 measured: documents
-        # scanned 3x in the un-cached plan). Lineage past the
-        # checkpoint is truncated, the same local-materialization
-        # trade-off as the eager localCheckpoints in dedup_clusters.
+        # once anyway (local checkpoint, reused by the band join and
+        # both verify payload branches, reclaimed by the ContextCleaner
+        # when the plan is dropped). eager=False is not lazy under AQE:
+        # the input scatter's shuffle stage runs here, at build time
+        # (1 job); the signatures are computed by the first action.
+        # Without this the corpus is re-tokenized and re-minhashed once
+        # per plan branch (r14 measured: documents scanned 3x in the
+        # un-cached plan). Lineage past the checkpoint is truncated, the
+        # same local-materialization trade-off as the eager
+        # localCheckpoints in dedup_clusters.
         with_sig = with_sig.localCheckpoint(eager=False)
     cands = lsh_candidate_pairs(
         with_sig, "__id", "sig", bands, rows_per_band, hashed_band_key=not portable
@@ -331,6 +345,50 @@ def near_dup_pairs(
 # ---------------------------------------------------------------------------
 
 
+def _union_find_roots(pairs) -> dict:
+    """Driver-side union-find over (a, b) node pairs: maps every node
+    that is not its component's minimum to that minimum. Nodes absent
+    from the map are their own component."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != x:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # min-root union keeps "component = min id" exact
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    return {k: find(k) for k in parent}
+
+
+def _collect_within(df: DataFrame, bound: int) -> list | None:
+    """All rows of ``df`` if it has at most ``bound`` of them, else None —
+    one job: collecting one row past the bound tells the two apart."""
+    rows = df.limit(bound + 1).collect()
+    return rows if len(rows) <= bound else None
+
+
+def _apply_roots(labels: DataFrame, key: str, roots: dict) -> DataFrame:
+    """(id, component) from a relation holding ``id`` and a label column
+    ``key``: the label's root from a driver-side union-find, or the label
+    itself when the union-find never moved it."""
+    if not roots:
+        return labels.select("id", F.col(key).alias("component"))
+    comp_map = labels.sparkSession.createDataFrame(
+        list(roots.items()), f"{key} long, component long"
+    )
+    return labels.join(F.broadcast(comp_map), key, "left").select(
+        "id", F.coalesce(F.col("component"), F.col(key)).alias("component")
+    )
+
+
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame,
@@ -339,19 +397,25 @@ def connected_components(
     driver_solve_max_edges: int = 1_000_000,
     broadcast_labels_max_nodes: int = 5_000_000,
 ) -> DataFrame:
-    """Min-label propagation connected components on (id_a, id_b) edges.
+    """Min-label propagation connected components on (id_a, id_b) edges
+    between ``nodes`` ids.
 
     Returns (id, component) where component = min node id reachable.
 
-    Two-level strategy: first contract every node to the min of its
-    closed neighborhood (one pass over the edge list), then solve the
-    CONTRACTED graph — which on near-dup corpora holds only the rare
-    inter-clique links. If it fits ``driver_solve_max_edges`` it is
-    solved with a driver-side union-find (the bounded-driver-work
-    pattern also used for IVF training: collecting a ≤1M-edge remainder
-    beats 3-5 distributed iterations each costing a scheduling round
-    trip); larger remainders run the distributed min-label fixpoint,
-    each round a join + min-aggregate linear in the contracted size.
+    Three paths, chosen by size against ``driver_solve_max_edges`` (the
+    bounded-driver-work pattern also used for IVF training: collecting a
+    ≤1M-edge graph beats 3-5 distributed iterations each costing a
+    scheduling round trip):
+
+    1. The edge list itself fits: one bounded collect of it and a
+       driver-side union-find. No contraction, checkpoint or count.
+    2. Otherwise contract every node to the min of its closed
+       neighborhood (one pass over the edge list) and solve the
+       CONTRACTED graph — which on near-dup corpora holds only the rare
+       inter-clique links — on the driver if it fits.
+    3. Larger remainders run the distributed min-label fixpoint, each
+       round a join + min-aggregate linear in the contracted size.
+
     This is why dedup at 100 TB reports clusters, not pair lists.
 
     edges_materialized=True: the caller already checkpointed the edge
@@ -366,6 +430,9 @@ def connected_components(
         # convergence check. At cluster scale use .checkpoint() to reliable
         # storage instead.
         edges = edges.localCheckpoint(eager=True)
+    small = _collect_within(edges.select("id_a", "id_b"), driver_solve_max_edges)
+    if small is not None:
+        return _apply_roots(nodes.select("id"), "id", _union_find_roots(small))
     sym = edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).unionByName(
         edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
     )
@@ -411,35 +478,9 @@ def connected_components(
     )
     sym = contracted.localCheckpoint(eager=True)
 
-    n_contracted = sym.count()
-    if n_contracted <= driver_solve_max_edges:
-        # bounded driver-side union-find over the contracted remainder
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:
-                parent[x], x = root, parent[x]
-            return root
-
-        for row in sym.collect():
-            ra, rb = find(row.src), find(row.dst)
-            if ra != rb:
-                # min-root union keeps "component = min id" exact
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        spark = sym.sparkSession
-        mapping = [(k, find(k)) for k in parent]
-        if mapping:
-            comp_map = spark.createDataFrame(mapping, "__l1 long, component long")
-            out = label1.join(F.broadcast(comp_map), "__l1", "left").select(
-                "id", F.coalesce(F.col("component"), F.col("__l1")).alias("component")
-            )
-        else:
-            out = label1.select("id", F.col("__l1").alias("component"))
-        return out
+    small = _collect_within(sym, driver_solve_max_edges)
+    if small is not None:
+        return _apply_roots(label1, "__l1", _union_find_roots(small))
 
     labels = label1.select(F.col("__l1").alias("id")).distinct().select(
         F.col("id"), F.col("id").alias("component")
@@ -820,17 +861,17 @@ def dedup_clusters_star(
     # near_dup_pairs (r15; no-op at corpus scale). Matched A/B kept this:
     # WITH the scatter the cluster entries measured 3.4/2.6 s vs
     # 14.6/3.4 without in the same session (full-run comparisons were
-    # confounded by session-level drift on this box).
-    docs = ensure_min_parallelism(docs)
+    # confounded by session-level drift on this box). The node list below
+    # reads the unscattered scan: it only meets a broadcast label map.
     with_sig = (
-        docs.select(
+        ensure_min_parallelism(docs).select(
             F.col(id_col).alias("__id"),
             shingles.alias("__ws"),
         )
         # empty word sets: undefined Jaccard + all-null signatures that
         # bucket together — excluded, as in near_dup_pairs
         .filter(F.size("__ws") > 0)
-        .withColumn("sig", minhash_signature(F.col("__ws"), num_hashes, portable))
+        .withColumn("sig", minhash_signature("__ws", num_hashes, portable))
     )
     # scoped cache: released below, right after the star edges materialize
     with_sig = with_sig.persist()
@@ -928,7 +969,7 @@ def build_minhash_index(
     return (
         docs.select(F.col(id_col), shingles.alias("tokens"))
         .filter(F.size("tokens") > 0)
-        .withColumn("sig", minhash_signature(F.col("tokens"), num_hashes, portable))
+        .withColumn("sig", minhash_signature("tokens", num_hashes, portable))
     )
 
 
@@ -1049,6 +1090,14 @@ def prefix_filter_pairs(
     hoisted-Jaccard verify. Hot tokens cannot skew the join: by
     construction the join keys are the rare tokens. Emits (id_a, id_b,
     inter_size, union_size).
+
+    Build-time jobs: ``localCheckpoint(eager=False)`` is not lazy under
+    AQE (Spark's default) — it runs every shuffle stage of its input
+    when called and leaves only the final stage to the first action.
+    Without ``caches`` this call therefore runs 8 jobs before it
+    returns (measured on a single-split scan): 1 for the input
+    scatter's round-robin shuffle under the word-set checkpoint, then
+    the 7 of :func:`_ranked_by_freq`. With AQE off it runs 3.
     """
     if not (0.0 < threshold <= 1.0):
         raise ValueError("threshold must be in (0, 1]")
@@ -1062,7 +1111,7 @@ def prefix_filter_pairs(
         ws = ws.persist()
         caches.append(ws)
     else:
-        # materialize the tokenized word-set relation once (lazy local
+        # materialize the tokenized word-set relation once (local
         # checkpoint, ContextCleaner-reclaimed): it feeds the frequency
         # aggregate, the rank join, and both verify sides — without
         # this the corpus text is re-tokenized per branch (r14
@@ -1130,7 +1179,16 @@ def _ranked_by_freq(ws: DataFrame) -> DataFrame:
 
     No dense rank materialization: a global row_number over the
     vocabulary would be a single-partition window — this stays an
-    ordinary shuffle join + per-doc sort, the billion-token shape."""
+    ordinary shuffle join + per-doc sort, the billion-token shape.
+
+    Jobs run at call time, under AQE (Spark's default): 2 for the
+    frequency checkpoint (its aggregate's shuffle stage, then the
+    checkpoint), 3 for the guard's collect (two shuffle stages, then
+    the result) and 2 for the shuffle stages of the join and group-by
+    under the returned relation's ``localCheckpoint(eager=False)``,
+    which AQE runs when the checkpoint is taken — 7 in all. With AQE
+    off it is 3: one each for the frequency checkpoint, the guard's
+    collect and the returned checkpoint."""
     # materialized eagerly: the injectivity guard below must run NOW, and
     # the rank join then reuses the same blocks instead of re-aggregating
     freq = _token_freq(ws).localCheckpoint(eager=True)
@@ -1157,7 +1215,8 @@ def _ranked_by_freq(ws: DataFrame) -> DataFrame:
         )
     )
     # one materialization feeds the probe/index explodes AND both verify
-    # sides (the prefix pipeline's widest fan-out)
+    # sides (the prefix pipeline's widest fan-out); its shuffle stages
+    # run here (see the docstring), the final stage on first use
     return ranked.localCheckpoint(eager=False)
 
 
@@ -1366,6 +1425,12 @@ def containment_pairs(
     Emits (id_a, id_b, inter_size, size_a, size_b, containment_ppm)
     with containment_ppm = (inter·1e6) div |a| — integer-exact, so the
     whole relation reproduces in a SQL oracle.
+
+    Build-time jobs: as :func:`prefix_filter_pairs` — without
+    ``caches``, 8 under AQE on a single-split scan (1 for the input
+    scatter's shuffle under the shingle checkpoint, which
+    ``eager=False`` does not defer under AQE, and 7 in
+    :func:`_ranked_by_freq`), 3 with AQE off.
     """
     if not (0.0 < threshold <= 1.0):
         raise ValueError("threshold must be in (0, 1]")

@@ -32,6 +32,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from hive_udf_spark.functions.literals import double_array_sql
+
 DEFAULT_QUANT_SCALE = 1000
 
 
@@ -48,19 +50,20 @@ def dot_int(a: Column, b: Column) -> Column:
     )
 
 
-def dot_int_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """Exact integer dot product over FIXED-dim arrays, unrolled into
-    ``dim`` codegen'd element_at multiply-adds. Higher-order functions
-    are CodegenFallback — ``dot_int`` pays ~2·dim interpreted lambda
-    evaluations plus a zip-array allocation per call, which at one call
-    PER CANDIDATE PAIR is the hottest expression in the verify stages.
-    Value-identical to ``dot_int`` for arrays of exactly ``dim``
-    elements (integer addition is associative); use only where the
-    fixed-dim contract already holds (quantized embeddings)."""
-    acc = F.element_at(a, 1) * F.element_at(b, 1)
-    for i in range(2, dim + 1):
-        acc = acc + F.element_at(a, i) * F.element_at(b, i)
-    return acc
+def dot_int_unrolled(a: str, b: str, dim: int) -> Column:
+    """Exact integer dot product of the FIXED-dim array columns named
+    ``a`` and ``b``, unrolled into ``dim`` codegen'd element_at
+    multiply-adds. Higher-order functions are CodegenFallback —
+    ``dot_int`` pays ~2·dim interpreted lambda evaluations plus a
+    zip-array allocation per call, which at one call PER CANDIDATE PAIR
+    is the hottest expression in the verify stages. Value-identical to
+    ``dot_int`` for arrays of exactly ``dim`` elements (integer addition
+    is associative); use only where the fixed-dim contract already holds
+    (quantized embeddings). Built as one parsed SQL expression: one py4j
+    round trip per plan instead of O(dim) Column calls."""
+    return F.expr(
+        " + ".join(f"element_at({a}, {i}) * element_at({b}, {i})" for i in range(1, dim + 1))
+    )
 
 
 def dot_double(a: Column, b: Column) -> Column:
@@ -376,9 +379,9 @@ def embedding_near_pairs_lsh(
         "__id",
         F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("__band"),
         F.col("__sig"),
-    ).withColumn(
-        "__bkey", F.expr(f"shiftright(__sig, __band * {r})").bitwiseAND(mask)
-    ).select("__id", "__band", "__bkey")
+    ).select(
+        "__id", "__band", F.expr(f"shiftright(__sig, __band * {r})").bitwiseAND(mask).alias("__bkey")
+    )
     a, b = banded.alias("a"), banded.alias("b")
     cands = (
         a.join(
@@ -396,23 +399,29 @@ def embedding_near_pairs_lsh(
     # byte-tiny pair stream + per-pair dot: round-robin before the verify
     # attach (AQE byte-coalescing + hot-id skew; the dedup-family r15 fix)
     cands = scatter_pairs(cands)
-    qv = sigs.select("__id", "__qv")
     # per-doc norm: the fold form is fine here (once per doc, not per pair)
     nrm = dot_int(F.col("__qv"), F.col("__qv"))
-    side_a = qv.select(
+    side_a = sigs.select(
         F.col("__id").alias("id_a"), F.col("__qv").alias("__qa"), nrm.alias("__na")
     )
-    side_b = qv.select(
+    side_b = sigs.select(
         F.col("__id").alias("id_b"), F.col("__qv").alias("__qb"), nrm.alias("__nb")
     )
     # per-PAIR dot: unrolled codegen (value-identical at the operator's
-    # fixed dim)
-    dq = dot_int_unrolled(F.col("__qa"), F.col("__qb"), dim)
+    # fixed dim). It is generated through a one-element explode because
+    # the optimizer pushes a Filter below a Project by inlining the
+    # projected expression at every reference: the filter below reads
+    # __dq three times, so a plain projection evaluated the dot four
+    # times per pair, and the verify stage's generated class outgrew
+    # Janino's 64 KB limit (a failed compile on every call, then no
+    # whole-stage codegen). A filter on a generated column stays above
+    # the Generate, so the dot is evaluated once.
+    dq = dot_int_unrolled("__qa", "__qb", dim)
     t2 = float(min_cosine) ** 2
     return (
         cands.join(side_a, "id_a")
         .join(side_b, "id_b")
-        .select("id_a", "id_b", dq.alias("__dq"), F.col("__na"), F.col("__nb"))
+        .select("id_a", "id_b", F.explode(F.array(dq)).alias("__dq"), F.col("__na"), F.col("__nb"))
         .filter(
             (F.col("__dq") > 0)
             & (
@@ -434,13 +443,8 @@ def embedding_near_pairs_lsh(
 # ---------------------------------------------------------------------------
 
 
-def _dvec_sql(row) -> str:
-    # string→double cast: Double.parseDouble round-trips repr(float) exactly
-    return "array(" + ", ".join(f"CAST('{float(v)!r}' AS DOUBLE)" for v in row) + ")"
-
-
 def _dmat_sql(M) -> str:
-    return "array(" + ", ".join(_dvec_sql(r) for r in M) + ")"
+    return "array(" + ", ".join(double_array_sql(r) for r in M) + ")"
 
 
 def _dots_sql(vec_sql: str, mat_sql: str) -> str:

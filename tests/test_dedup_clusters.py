@@ -145,9 +145,11 @@ def test_dedup_clusters_mode_dispatch(spark, sf_dir):
 
 
 def test_distributed_and_driver_cc_paths_agree(spark, sf_dir):
-    """connected_components' driver-side union-find (small contracted
-    remainder) and distributed min-label fixpoint must produce identical
-    components."""
+    """connected_components' three paths must produce identical
+    components: the driver-side union-find over the whole edge list (the
+    default when it fits), the driver-side union-find over the contracted
+    graph (the bound lies between the contracted and full edge counts),
+    and the distributed min-label fixpoint (bound 0)."""
     from pyspark.sql import functions as F
 
     from hive_udf_spark.operators.dedup import connected_components, near_dup_pairs
@@ -156,14 +158,25 @@ def test_distributed_and_driver_cc_paths_agree(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").limit(200)
     edges = near_dup_pairs(docs, "doc_id", "text", threshold=0.5).select("id_a", "id_b")
     nodes = docs.select(F.col("doc_id").alias("id"))
-    drv = sorted(map(tuple, connected_components(edges, nodes).collect()))
-    dist = sorted(
-        map(
-            tuple,
-            connected_components(edges, nodes, driver_solve_max_edges=0).collect(),
-        )
-    )
-    assert drv == dist and len(drv) == 200
+    pairs = [(r.id_a, r.id_b) for r in edges.collect()]
+    # the contracted graph connected_components builds: both edge
+    # directions relabeled by the min of each closed neighborhood, the
+    # self-loops dropped
+    sym = pairs + [(b, a) for a, b in pairs]
+    label: dict = {}
+    for a, b in sym:
+        label[a] = min(label.get(a, a), b)
+    n_contracted = len({(label[a], label[b]) for a, b in sym if label[a] != label[b]})
+    assert n_contracted < len(pairs) - 1
+
+    def components(**kw):
+        return sorted(map(tuple, connected_components(edges, nodes, **kw).collect()))
+
+    direct = components()
+    contracted = components(driver_solve_max_edges=len(pairs) - 1)
+    distributed = components(driver_solve_max_edges=0)
+    assert direct == contracted == distributed and len(direct) == 200
+    assert len({c for _, c in direct}) < 200
 
 
 def test_dedup_representatives_conservation(spark, sf_dir):

@@ -143,10 +143,42 @@ def test_near_pairs_lsh_no_cartesian_no_python(spark, sf_dir):
     from hive_udf_spark.operators.similarity import embedding_near_pairs_lsh
 
     emb = load_table(spark, sf_dir, "embeddings")
-    plan = plan_of(embedding_near_pairs_lsh(emb, min_cosine=0.35, nbits=32, bands=8))
+    df = embedding_near_pairs_lsh(emb, min_cosine=0.35, nbits=32, bands=8, dim=64)
+    plan = plan_of(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    # the per-pair dot (2 element_at calls per dimension) is evaluated
+    # once, not re-inlined into each filter reference
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    assert optimized.count("element_at(") == 2 * 64
+
+
+def test_dedup_operators_compile_without_codegen_fallback(spark, sf_dir):
+    """The dedup-pass operators' generated code compiles. With the
+    interpreted fallback off, a generated class past Janino's 64 KB
+    limit fails the query instead of silently running without
+    whole-stage codegen."""
+    from hive_udf_spark.operators.dedup import (
+        containment_pairs,
+        dedup_clusters,
+        near_dup_pairs,
+        prefix_filter_pairs,
+    )
+    from hive_udf_spark.operators.similarity import embedding_near_pairs_lsh
+
+    docs = load_table(spark, sf_dir, "documents")
+    emb = load_table(spark, sf_dir, "embeddings")
+    prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        near_dup_pairs(docs, "doc_id", "text", threshold=0.7, bands=4).collect()
+        dedup_clusters(docs, "doc_id", "text", threshold=0.7, mode="star").collect()
+        prefix_filter_pairs(docs, "doc_id", "text", threshold=0.7).collect()
+        containment_pairs(docs, "doc_id", "text", threshold=0.9).collect()
+        embedding_near_pairs_lsh(emb, min_cosine=0.9, nbits=32, bands=4, dim=64).collect()
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prev)
 
 
 def test_approx_top_k_is_partial_final(spark, sf_dir):
